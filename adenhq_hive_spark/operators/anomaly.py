@@ -49,7 +49,7 @@ def daily_count_anomalies(
     input is kilobytes even at petabyte event volume.
 
     Output: (key_col, day, n_events, n_days, mean_events, is_anomaly),
-    ordered. ``mean_events`` is round(S1/n, 4) via exact integer
+    unordered. ``mean_events`` is round(S1/n, 4) via exact integer
     division; groups with a single day or zero variance are never
     flagged (var == 0 => only a count differing from the constant mean
     could flag, but then var wouldn't be 0 — vacuous, kept explicit).
@@ -85,5 +85,4 @@ def daily_count_anomalies(
                 )
             ).alias("is_anomaly"),
         )
-        .orderBy(key_col, "day")
     )

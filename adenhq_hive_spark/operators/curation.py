@@ -183,7 +183,7 @@ def cluster_split(
     groupBy + one hash-key join, no pair expansion — the oracle-checked
     mode.
 
-    Emits (id, rep_id, split) ordered by id.  Scale: the exact mode
+    Emits (id, rep_id, split), unordered.  Scale: the exact mode
     shuffles on the 32-hex content key (partial-agg'd); the pairs mode
     inherits connected_components' O(log n)-round bound.
     """
@@ -221,7 +221,7 @@ def cluster_split(
     assert expr is not None
     return rep.select(
         id_col, "rep_id", expr.otherwise(F.lit("test")).alias(split_col)
-    ).orderBy(id_col)
+    )
 
 
 def pack_sequences(
@@ -821,7 +821,7 @@ def pack_efficiency(
     exploded). All emitted fractions use exact integer arithmetic
     (``text.frac4``).
 
-    Output: one row per L, ordered:
+    Output: one row per L, unordered:
     (ctx_len, n_docs, total_tokens, n_over, tokens_over,
      n_seqs_concat, n_seqs_split, waste_frac_split).
     """
@@ -855,7 +855,7 @@ def pack_efficiency(
         F.floor((total + L - 1) / L).alias("n_seqs_concat"),
         "n_seqs_split",
         frac4(nss * L - total, nss * L).alias("waste_frac_split"),
-    ).orderBy("ctx_len")
+    )
 
 
 def quality_weighted_sample(
@@ -1042,7 +1042,7 @@ def source_scorecard(
     is the exact rational sum(qs10) / (10 n)).
 
     Output: (source, n_docs, n_tokens, mean_quality, gopher_pass_rate,
-    dup_rate), ordered by source.
+    dup_rate), unordered.
     """
     from .text import frac4, gopher_rules, quality_score
 
@@ -1084,7 +1084,7 @@ def source_scorecard(
         frac4(F.col("_qs10"), n * 10).alias("mean_quality"),
         frac4(F.col("_g"), n).alias("gopher_pass_rate"),
         frac4(F.col("_d"), n).alias("dup_rate"),
-    ).orderBy(source_col)
+    )
 
 
 def temperature_mixture(
@@ -1109,7 +1109,7 @@ def temperature_mixture(
     Shape: one map-side token count + one |sources|-row aggregate + a
     window over that tiny relation (constant-partitioned: it holds one
     row per source, never data). Output: (source, n_tokens, raw_share,
-    weight) ordered by source — ``weight`` is the T=2 mixture column to
+    weight), unordered — ``weight`` is the T=2 mixture column to
     feed mixture_sample's rate table or a loader's sampler.
     """
     from .text import frac4, ws_token_count
@@ -1134,7 +1134,6 @@ def temperature_mixture(
             frac4(F.col("n_tokens"), F.col("_tot")).alias("raw_share"),
             frac4(F.col("_sq"), F.col("_sqtot")).alias("weight"),
         )
-        .orderBy(source_col)
     )
 
 
@@ -1164,7 +1163,7 @@ def preference_pairs(
     ranks default NULLS LAST — opposite picks for *rejected*).
 
     Output: (group_col, n_candidates, chosen_id, chosen_score,
-    rejected_id, rejected_score, margin), ordered by group.
+    rejected_id, rejected_score, margin), unordered.
     """
     agg = (
         df.filter(F.col(score_col).isNotNull())
@@ -1186,7 +1185,7 @@ def preference_pairs(
         (F.col(f"_c.{score_col}") - F.col(f"_r.{score_col}")).alias(
             "margin"
         ),
-    ).orderBy(group_col)
+    )
 
 
 def length_buckets(
@@ -1207,7 +1206,7 @@ def length_buckets(
     exists. Map-only per-doc bucketing + one small aggregation.
 
     Output: (source, bucket, lo_tokens, hi_tokens, n_docs, n_tokens),
-    ordered.
+    unordered.
     """
     from .text import ws_token_count
 
@@ -1236,7 +1235,6 @@ def length_buckets(
             "n_docs",
             "n_tokens",
         )
-        .orderBy(source_col, "bucket")
     )
 
 
@@ -1273,7 +1271,6 @@ def event_sequences(
             F.max(ts_col).alias("last_ts"),
             F.array_join(seq, " ").alias("seq_text"),
         )
-        .orderBy(user_col)
     )
 
 
@@ -1743,7 +1740,7 @@ def budget_waterfill(
     Scale: one groupBy over the corpus, then all logic on the
     |sources|-row rollup (a single-partition window over a metadata-
     sized relation — the documented bm25/top-k smallness pattern).
-    Emits (group, n_tokens, alloc_tokens, capped) sorted by group.
+    Emits (group, n_tokens, alloc_tokens, capped), unordered.
     """
     if not 0 < budget_ppm <= 1_000_000:
         raise ValueError("budget_ppm must be in 1..1_000_000")
@@ -1812,7 +1809,7 @@ def budget_waterfill(
         (F.col("k").isNotNull() & (F.col("rn") >= F.col("k")))
         .alias("capped"),
     )
-    return out.orderBy(group_col)
+    return out
 
 
 def quantile_normalize(
@@ -1839,7 +1836,7 @@ def quantile_normalize(
     rank uses the distributed exact_rank plan (range-partition + local
     rank + broadcast prefix offsets — operators/ranking.py), never a
     single-partition window; the final lookup is a keyed equi-join on
-    the rank index. Emits (id, group, score, norm_score) ordered by id.
+    the rank index. Emits (id, group, score, norm_score), unordered.
     """
     from .ranking import exact_rank
 
@@ -1875,7 +1872,6 @@ def quantile_normalize(
         )
         .join(glob, F.col("idx") == F.col("rn_glob"))
         .select(id_col, group_col, "score", "norm_score")
-        .orderBy(id_col)
     )
 
 
@@ -1948,7 +1944,7 @@ def mad_outliers(
 
     Scale: two grouped aggregations over the corpus; the |sources|-row
     median/MAD relations broadcast back. Emits flagged rows
-    (group, id, value, dev_x4, mad_x4) ordered by (group, id).
+    (group, id, value, dev_x4, mad_x4), unordered.
     """
     if k_ppm < 0:
         raise ValueError("k_ppm must be >= 0")
@@ -1981,7 +1977,6 @@ def mad_outliers(
             (F.lit(2) * F.col("dev2")).alias("dev_x4"),
             "mad4",
         )
-        .orderBy(group_col, id_col)
     )
 
 
@@ -2010,7 +2005,7 @@ def winsorize(
     local rank + broadcast prefix offsets — never a data-sized
     single-partition window); the |groups|-row bound relation
     broadcasts back. Emits (group, id, value, lo, hi, clipped) for
-    clipped rows only, ordered by (group, id).
+    clipped rows only, unordered.
     """
     if not (0 <= lo_pct <= hi_pct <= 100):
         raise ValueError("need 0 <= lo_pct <= hi_pct <= 100")
@@ -2061,7 +2056,6 @@ def winsorize(
             .cast("long")
             .alias("clipped"),
         )
-        .orderBy(group_col, id_col)
     )
 
 
@@ -2088,7 +2082,7 @@ def seq_motif(
     with instr — no regex anywhere, so Java-regex (leftmost-first)
     vs RE2 (leftmost-longest) semantic drift cannot reach the
     contract.  Emits (key, n_events, motif_n, first_pos) for keys with
-    at least one match, ordered by key.
+    at least one match, unordered.
     """
     if not motif:
         raise ValueError("motif must be non-empty")
@@ -2123,5 +2117,4 @@ def seq_motif(
         .withColumn("first_pos", F.instr(F.col("seq"), motif).cast("long"))
         .filter(F.col("motif_n") > 0)
         .select(key_col, "n_events", "motif_n", "first_pos")
-        .orderBy(key_col)
     )

@@ -1104,7 +1104,6 @@ def cross_source_dup_matrix(
             F.count_distinct("pair_docs.lo").alias("n_docs_lo"),
             F.count_distinct("pair_docs.hi").alias("n_docs_hi"),
         )
-        .orderBy("src_lo", "src_hi")
     )
 
 
@@ -1127,7 +1126,7 @@ def cluster_best_rep(
     posture as :func:`dup_clusters`; the selection adds ONE keyed window
     over the (doc, cluster) labels, partitioned the same way.
 
-    Output: (id_col, cluster_id, cluster_size, n_chars, kept), ordered.
+    Output: (id_col, cluster_id, cluster_size, n_chars, kept), unordered.
     """
     labels = dup_clusters(
         df, pairs=pairs, text_col=text_col, id_col=id_col, k=k,
@@ -1151,7 +1150,6 @@ def cluster_best_rep(
             "n_chars",
             (rn == 1).alias("kept"),
         )
-        .orderBy(id_col)
     )
 
 

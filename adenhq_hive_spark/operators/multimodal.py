@@ -487,14 +487,13 @@ def phash_groups(media: DataFrame, decode_stub: str = "real") -> DataFrame:
     has boilerplate assets). Pair enumeration (:func:`phash_pairs`)
     is for the high-entropy pixel-hash regime.
 
-    Output: (kind, phash, n, keep_id) for groups with n > 1, ordered.
+    Output: (kind, phash, n, keep_id) for groups with n > 1, unordered.
     """
     ph = media_phash(media, decode_stub=decode_stub)
     return (
         ph.groupBy("kind", "phash")
         .agg(F.count("*").alias("n"), F.min("media_id").alias("keep_id"))
         .filter(F.col("n") > 1)
-        .orderBy("kind", "phash")
     )
 
 

@@ -67,7 +67,6 @@ def profile_table(
             "e.min_s",
             "e.max_s",
         )
-        .orderBy("col_name")
     )
 
 
@@ -139,7 +138,7 @@ def ks_drift(
     grid). Grid size = |groups| · |distinct values|, metadata-sized
     for any realistic value column (doc lengths, scores).
 
-    Emits (group_col, n_docs, ks) sorted by group.
+    Emits (group_col, n_docs, ks), unordered.
     """
     from pyspark.sql import Window
 
@@ -198,7 +197,6 @@ def ks_drift(
                 frac4(F.col("ks_num"), F.col("den"))
             ).alias("ks"),
         )
-        .orderBy(group_col)
     )
 
 
@@ -224,7 +222,7 @@ def psi_drift(
 
     Scale shape: one (group, bucket) count aggregation, densified over
     the B-bucket grid (metadata-sized), one bucket-total rollup —
-    no windows at all. Emits (group_col, n_docs, psi) sorted by group.
+    no windows at all. Emits (group_col, n_docs, psi), unordered.
     """
     if n_buckets < 2:
         raise ValueError("n_buckets must be >= 2")
@@ -295,7 +293,6 @@ def psi_drift(
                 4,
             ).alias("psi"),
         )
-        .orderBy(group_col)
     )
 
 
@@ -397,7 +394,7 @@ def label_agreement(
     n / agree / sum(marg_a * marg_b) without ever joining the marginal
     rollups (a branch-and-join shape re-scans the corpus per branch —
     the plan this replaces read the parquet twice).  Emits
-    (group?, n, agree, po_r6, pe_r6, kappa_r6) ordered by group.
+    (group?, n, agree, po_r6, pe_r6, kappa_r6), unordered.
     """
     g = [group_col] if group_col else []
     z = F.lit(0).cast("long")
@@ -451,7 +448,7 @@ def label_agreement(
             6,
         ).alias("kappa_r6"),
     )
-    return out.orderBy(*g) if g else out
+    return out
 
 
 def kripp_alpha(
@@ -482,8 +479,8 @@ def kripp_alpha(
 
     Scale: one corpus scan into a (group, class-pair) groupBy — the
     state is |groups|·|classes|² rows; everything after is
-    metadata-sized.  Emits (group?, n_units, disagree, alpha_r6)
-    ordered by group.
+    metadata-sized.  Emits (group?, n_units, disagree, alpha_r6),
+    unordered.
     """
     g = [group_col] if group_col else []
     cnt = (
@@ -523,7 +520,7 @@ def kripp_alpha(
         (d / 2).cast("long").alias("disagree"),
         F.round(alpha, 6).alias("alpha_r6"),
     )
-    return out.orderBy(*g) if g else out
+    return out
 
 
 def classification_report(
@@ -615,7 +612,7 @@ def classification_report(
             ),
             6,
         ).alias("f1_r6"),
-    ).orderBy("cls")
+    )
 
 
 def cramers_v(

@@ -615,7 +615,7 @@ def winnow_overlap_pairs(
     only ever undercounts on capped keys, symmetrically for every
     pair).
 
-    Output: (id_a, id_b, n_shared), n_shared >= min_shared, ordered.
+    Output: (id_a, id_b, n_shared), n_shared >= min_shared, unordered.
     """
     fps = winnow_fingerprints(df, k=k, w=w, text_col=text_col,
                               id_col=id_col)
@@ -635,7 +635,6 @@ def winnow_overlap_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
-        .orderBy("id_a", "id_b")
     )
 
 

@@ -103,8 +103,8 @@ def retention_matrix(
     (ISO Monday on both engines) and the offset from an exact day
     difference DIV 7, so the triangle hashes cross-engine.
 
-    Emits (cohort_week, week_offset, cohort_n, active_n, retention_r6)
-    ordered — offset 0 is 1.0 by construction (the cohort's own week).
+    Emits (cohort_week, week_offset, cohort_n, active_n, retention_r6),
+    unordered — offset 0 is 1.0 by construction (the cohort's own week).
 
     Scale: one (unit, week) distinct rollup (data-sized, keyed by
     unit), a broadcast-joined first-week relation, then an O(cohorts x
@@ -147,7 +147,6 @@ def retention_matrix(
                 + F.lit(0.0)
             ).alias("retention_r6"),
         )
-        .orderBy("cohort_week", "week_offset")
     )
 
 
@@ -177,7 +176,7 @@ def kaplan_meier(
     unit dies pins S to 0.0 from that point on (never ln(0)).
 
     Emits one row per (group, lifetime-with-deaths): (group_col,
-    t_days, n_risk, deaths, surv_r6), ordered.
+    t_days, n_risk, deaths, surv_r6), unordered.
 
     Scale: one (group, unit) rollup (data-sized, keyed by unit), then
     O(groups x distinct lifetimes) rows through two windows — lifetimes
@@ -251,5 +250,4 @@ def kaplan_meier(
             F.col("deaths").cast("long").alias("deaths"),
             (surv + F.lit(0.0)).alias("surv_r6"),
         )
-        .orderBy(group_col, "t_days")
     )

@@ -622,7 +622,8 @@ def semdedup(
     # the O(d) norm fold inside the transform LAMBDA — O(d²) interpreted
     # eval per row, measured 5.8 s of the 12.5 s sf1 total (46%) as the
     # scan-stage projection, paid AGAIN by the training sample's
-    # collect. r12 stage breakdown: scripts/exp_semdedup_stages.py.
+    # collect. r12 stage breakdown: OPTIMIZATION_r12.md, "semdedup:
+    # root cause and fix".
     raw = vectors.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v")
     )
@@ -709,13 +710,10 @@ def semdedup(
         schema="id long, cluster_id int, keep boolean, dup_of long",
     )
     # Materialize the per-cluster kernel's output ONCE (r12, guide
-    # §2.4/§5): downstream consumers re-execute this subtree — a final
-    # orderBy's range-partitioner SAMPLING pass runs the child before
-    # the sort runs it again (measured 2× the whole operator at sf10:
-    # 145 s vs 73 s warm for pl_semdedup), and pl_semdedup_check fans
-    # the result into two branches. The output is tiny (4 narrow
-    # columns, one row per vector); the gram kernel it pins is the
-    # most expensive stage in the tree. Per-invocation persist only —
+    # §2.4/§5): pl_semdedup_check fans the result into two branches,
+    # each of which would re-execute this subtree. The output is tiny
+    # (4 narrow columns, one row per vector); the gram kernel it pins
+    # is the most expensive stage in the tree. Per-invocation persist only —
     # released by dedup.release_persisted() between queries; nothing
     # survives a run.
     from .dedup import _materialize
@@ -1082,8 +1080,8 @@ def pq_staleness(
     (:func:`pq_append_index`) or has the distribution drifted enough
     that a RE-TRAIN (:func:`save_pq_index`) is due?
 
-    TWO orthogonal failure modes, two signals (scripts/
-    probe_pq_retrain.py measured both on the bench corpus):
+    TWO orthogonal failure modes, two signals (both measured on the
+    bench corpus: BASELINE.md, "PQ re-train policy probe"):
 
     - **Coverage failure** — the delta occupies regions the codebooks
       never trained on. Signal: mean quantization error of the delta
@@ -1991,8 +1989,8 @@ def label_error_candidates(
     Same quantized-kNN contract as knn_label_purity (shared _knn_vote
     builder — integer-exact graph, broadcast code matrix capped at
     ``max_vectors``, batch-local top-k).  Emits (id, label, pred_label,
-    votes) for disagreeing rows at or above the vote threshold, ordered
-    by (votes desc, id) — strongest evidence first.
+    votes) for disagreeing rows at or above the vote threshold,
+    unordered.
     """
     if not (1 <= min_votes <= k):
         raise ValueError("need 1 <= min_votes <= k")
@@ -2021,5 +2019,4 @@ def label_error_candidates(
             "pred_label",
             "votes",
         )
-        .orderBy(F.desc("votes"), id_col)
     )

@@ -446,7 +446,6 @@ def hll_estimate_grouped(
                    f" DIV ({a_den} * s)").alias("estimate"),
             "n_exact",
         )
-        .orderBy(group_col)
     )
 
 
@@ -800,7 +799,7 @@ def hist_quantiles(
     (pinned in tests).  ``value_col`` must be non-negative (negatives
     raise at plan build).
 
-    Emits (group, pct, n, est, exact) ordered by (group, pct).
+    Emits (group, pct, n, est, exact), unordered.
 
     Plan: histogram = one (group, bucket) shuffle with partial agg and
     <= ~500 buckets/group; the cumulative window runs over that
@@ -865,7 +864,6 @@ def hist_quantiles(
             F.col("est").cast("long").alias("est"),
             F.col("exact").cast("long").alias("exact"),
         )
-        .orderBy(group_col, "pct")
     )
 
 
@@ -904,7 +902,7 @@ def kmv_jaccard(
     (single double op, ROUND 6 + signed-zero guard) — full oracle hash.
 
     Emits (src_a, src_b, k_used, n_both, jaccard_r6) for every unordered
-    group pair, ordered.  Scale: signatures are O(groups x k) rows
+    group pair, unordered.  Scale: signatures are O(groups x k) rows
     regardless of corpus size; the pair stage is algebra over
     signatures — at 1000 executors the corpus is touched once.
     """
@@ -1008,7 +1006,6 @@ def kmv_jaccard(
                 + F.lit(0.0)
             ).alias("jaccard_r6"),
         )
-        .orderBy("src_a", "src_b")
     )
 
 
@@ -1083,4 +1080,4 @@ def approx_quantile_witness(
             (F.col("n_lt").cast("double") <= target + eps)
             & (F.col("n_le").cast("double") >= target - eps)
         ).alias("rank_ok"),
-    ).orderBy(group_col, "pct")
+    )

@@ -765,7 +765,7 @@ def autocorr_daily(
     double division, ROUND 6.  The lag pairing is lead(x, k) over the
     day order.
 
-    Emits (group_col, lag, n_days, n_pairs, acf_r6), ordered; lags
+    Emits (group_col, lag, n_days, n_pairs, acf_r6), unordered; lags
     with fewer than 2 pairs or a constant series yield NULL acf.
 
     Scale: the daily rollup is the only data-sized shuffle; the K
@@ -851,7 +851,7 @@ def autocorr_daily(
                 )
             ),
         ).alias("acf_r6"),
-    ).orderBy(group_col, "lag")
+    )
 
 
 def srm_check(
@@ -1071,7 +1071,7 @@ def gini_concentration(
     fixed-shape double expression per group, ROUND 6, signed-zero
     guard.  Groups with a zero value sum or a single unit emit NULL.
 
-    Emits (group_col, n_units, gini_r6), ordered.  Scale: the
+    Emits (group_col, n_units, gini_r6), unordered.  Scale: the
     (group, unit) rollup is data-sized; ranking is the exact_rank
     shape; everything after is O(groups).
     """
@@ -1119,4 +1119,4 @@ def gini_concentration(
         F.col("grp").alias(group_col),
         F.col("n").cast("long").alias("n_units"),
         _zero_guard(F.round(g, 6)).alias("gini_r6"),
-    ).orderBy(group_col)
+    )

@@ -944,7 +944,6 @@ def zipf_coverage(
             "covered_tokens",
             frac4(F.col("covered_tokens"), F.col("total_tokens")).alias("share"),
         )
-        .orderBy("k")
     )
 
 
@@ -1171,8 +1170,8 @@ def readability(df: DataFrame, text_col: str = "text") -> DataFrame:
       grade = 0.39*(W/S) + 11.8*(Y/W) - 15.59
 
     Emits (doc_id, words, sentences, syllables, ease_r4, grade_r4),
-    ordered by doc_id.  Scale: embarrassingly parallel map over the
-    corpus — no shuffle at all before the output sort.
+    unordered.  Scale: embarrassingly parallel map over the
+    corpus — no shuffle at all.
     """
     from .sketch import _spread
 
@@ -1204,4 +1203,4 @@ def readability(df: DataFrame, text_col: str = "text") -> DataFrame:
         "syllables",
         (F.when(nz, F.round(ease, 4)) + F.lit(0.0)).alias("ease_r4"),
         (F.when(nz, F.round(grade, 4)) + F.lit(0.0)).alias("grade_r4"),
-    ).orderBy("doc_id")
+    )

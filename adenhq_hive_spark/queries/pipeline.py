@@ -41,8 +41,7 @@ Q(QuerySpec(
     doc="Exact dedup keeping min doc_id per content hash "
         "(operators/dedup.py:dedup_exact; hash-groupBy tier).",
     builder=lambda spark, sf: dedup_exact(load_table(spark, sf, "documents"))
-    .select("doc_id")
-    .orderBy("doc_id"),
+    .select("doc_id"),
     engine_sql=None,
     oracle_sql_str="""
         SELECT doc_id FROM documents
@@ -58,7 +57,7 @@ Q(QuerySpec(
         "ngram_jaccard_pairs); oracle = DuckDB list-lambda formulation.",
     builder=lambda spark, sf: ngram_jaccard_pairs(
         load_table(spark, sf, "documents"), k=3, threshold=0.5
-    ).orderBy("id_a", "id_b"),
+    ),
     oracle_sql_str="""
         WITH sh AS (
           SELECT doc_id AS id, list_distinct(list_transform(
@@ -138,7 +137,7 @@ Q(QuerySpec(
         "recursive-CTE transitive closure over the same pairs.",
     builder=lambda spark, sf: dup_clusters(
         load_table(spark, sf, "documents"), k=3, threshold=0.5
-    ).orderBy("doc_id"),
+    ),
     oracle_sql_str=_CLUSTER_LABELS_CTE + """
         SELECT doc_id, cluster_id FROM labels
         ORDER BY doc_id
@@ -247,8 +246,7 @@ Q(QuerySpec(
     doc="Exact brute-force cosine top-5 for query vectors vec_id<5 "
         "(operators/similarity.py:cosine_topk; JVM-side zip_with/aggregate "
         "dot products, broadcast query side).",
-    builder=lambda spark, sf: cosine_topk(*_queries_vecs(spark, sf), k=5)
-    .orderBy("query_id", "rank"),
+    builder=lambda spark, sf: cosine_topk(*_queries_vecs(spark, sf), k=5),
     oracle_sql_str="""
         SELECT query_id, rank, cand_id, cosine FROM (
           SELECT q.vec_id AS query_id, v.vec_id AS cand_id,
@@ -315,7 +313,6 @@ def _containment_witness(approx, emb, queries, m: int = 100):
                 "contained"
             ),
         )
-        .orderBy("query_id")
     )
 
 
@@ -385,8 +382,7 @@ Q(QuerySpec(
     builder=lambda spark, sf: lang_id(load_table(spark, sf, "documents"))
     .groupBy("lang", "lang_pred")
     .count()
-    .withColumnRenamed("count", "n")
-    .orderBy("lang", "lang_pred"),
+    .withColumnRenamed("count", "n"),
     oracle_sql_str=r"""
         WITH h AS (
           SELECT lang,
@@ -493,8 +489,7 @@ Q(QuerySpec(
         "unit-tested instead).",
     builder=lambda spark, sf: fingerprint(load_table(spark, sf, "documents"))
     .groupBy("fp_norm")
-    .agg(F.count("*").alias("n"), F.min("doc_id").alias("keep_id"))
-    .orderBy("fp_norm"),
+    .agg(F.count("*").alias("n"), F.min("doc_id").alias("keep_id")),
     oracle_sql_str=r"""
         SELECT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp_norm,
                COUNT(*) AS n, MIN(doc_id) AS keep_id
@@ -564,8 +559,7 @@ Q(QuerySpec(
     .agg(
         F.count("*").alias("n"),
         F.sum(F.col("meta.n_bytes")).alias("total_bytes"),
-    )
-    .orderBy("kind"),
+    ),
     oracle_sql_str="""
         SELECT CASE WHEN doc_id % 3 = 0 THEN 'image'
                     WHEN doc_id % 3 = 1 THEN 'audio'
@@ -590,8 +584,7 @@ Q(QuerySpec(
         synthetic_media_table(load_table(spark, sf, "documents")),
         decode_stub="real",
     )
-    .select("media_id", "kind", "format", "width", "height", "n_frames")
-    .orderBy("media_id"),
+    .select("media_id", "kind", "format", "width", "height", "n_frames"),
     oracle_sql_str="""
         SELECT doc_id AS media_id,
                CASE doc_id % 3 WHEN 0 THEN 'image'
@@ -641,8 +634,7 @@ Q(QuerySpec(
         F.col("a.score").alias("score"),
         F.col("a.x").alias("x"), F.col("a.y").alias("y"),
         F.col("a.w").alias("w"), F.col("a.h").alias("h"),
-    )
-    .orderBy("media_id", "label"),
+    ),
     oracle_sql_str="""
         WITH m AS (
           SELECT doc_id AS media_id,
@@ -721,8 +713,7 @@ Q(QuerySpec(
             F.abs(F.col("a_part") - F.col("x_part"))
             <= 0.15 * F.col("x_part")
         ).alias("part_ok"),
-    )
-    .orderBy("l_returnflag"),
+    ),
     oracle_sql_str="""
         SELECT l_returnflag, TRUE AS supp_ok, TRUE AS part_ok
         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
@@ -750,8 +741,7 @@ Q(QuerySpec(
         F.col("win.start").alias("win_start"),
         "event_type",
         "n",
-    )
-    .orderBy("win_start", "event_type"),
+    ),
     oracle_sql_str="""
         WITH bounds AS (
             SELECT time_bucket(INTERVAL 5 MINUTE, MIN(ts))
@@ -807,15 +797,9 @@ Q(QuerySpec(
         "all-pairs cosine >= 0.45 (operators/similarity.py:"
         "cosine_dedup_pairs); oracle = DuckDB brute force. The LSH "
         "variant is recall-gated in tests/test_similarity.py.",
-    # _materialize before the global sort: rangepartitioning SAMPLES its
-    # child, which would run the blocked-BLAS pandas kernel twice (r12
-    # range-sampling audit; per-run persist, released between queries)
     builder=lambda spark, sf: __import__(
-        "adenhq_hive_spark.operators.dedup", fromlist=["_materialize"]
-    )._materialize(__import__(
         "adenhq_hive_spark.operators.similarity", fromlist=["cosine_dedup_pairs"]
-    ).cosine_dedup_pairs(load_table(spark, sf, "embeddings"), threshold=0.45))
-    .orderBy("id_a", "id_b"),
+    ).cosine_dedup_pairs(load_table(spark, sf, "embeddings"), threshold=0.45),
     oracle_sql_str="""
         SELECT a.vec_id AS id_a, b.vec_id AS id_b,
                ROUND(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
@@ -849,7 +833,7 @@ Q(QuerySpec(
         load_table(spark, sf, "documents").filter(F.col("source") != "src0"),
         load_table(spark, sf, "documents").filter(F.col("source") == "src0"),
         n=5,
-    ).select("doc_id").orderBy("doc_id"),
+    ).select("doc_id"),
     oracle_sql_str="""
         WITH g AS (
           SELECT doc_id, source, unnest(list_distinct(list_transform(
@@ -907,7 +891,7 @@ Q(QuerySpec(
     ).select(
         "doc_id", "n_email", "n_phone", "n_ipv4",
         F.md5("redacted").alias("red_md5"),
-    ).orderBy("doc_id"),
+    ),
     oracle_sql_str=r"""
         WITH aug AS (
           SELECT doc_id,
@@ -954,7 +938,7 @@ Q(QuerySpec(
         F.count("*").alias("n"),
         F.min("doc_id").alias("min_id"),
         F.max("doc_id").alias("max_id"),
-    ).orderBy("split"),
+    ),
     oracle_sql_str="""
         SELECT CASE
                  WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'cccd'
@@ -980,7 +964,7 @@ Q(QuerySpec(
         "(operators/curation.py:pack_sequences).",
     builder=lambda spark, sf: _curation().pack_sequences(
         load_table(spark, sf, "documents"), max_tokens=512
-    ).orderBy("source", "doc_id"),
+    ),
     oracle_sql_str="""
         WITH t AS (
           SELECT source, doc_id,
@@ -1011,7 +995,7 @@ Q(QuerySpec(
     ).select(
         "source", "chunk_id", "n_docs", "n_tokens",
         F.md5("packed_text").alias("packed_md5"),
-    ).orderBy("source", "chunk_id"),
+    ),
     oracle_sql_str="""
         WITH t AS (
           SELECT source, doc_id, text,
@@ -1047,7 +1031,7 @@ Q(QuerySpec(
     builder=lambda spark, sf: _curation().mixture_sample(
         load_table(spark, sf, "documents"),
         {"src0": "2000", "src1": "8000", "src2": "c000"},
-    ).groupBy("source").agg(F.count("*").alias("n")).orderBy("source"),
+    ).groupBy("source").agg(F.count("*").alias("n")),
     oracle_sql_str="""
         SELECT source, COUNT(*) AS n
         FROM documents
@@ -1075,7 +1059,7 @@ Q(QuerySpec(
     ).select(
         "doc_id", "chunk_idx",
         F.md5("chunk_text").alias("chunk_md5"), "n_tokens",
-    ).orderBy("doc_id", "chunk_idx"),
+    ),
     oracle_sql_str="""
         WITH t AS (
           SELECT doc_id,
@@ -1117,8 +1101,7 @@ Q(QuerySpec(
     .agg(
         F.count("*").alias("n_docs"),
         F.sum("n_tokens").alias("n_tokens"),
-    )
-    .orderBy("source"),
+    ),
     oracle_sql_str="""
         WITH t AS (
           SELECT source, doc_id,
@@ -1200,7 +1183,7 @@ Q(QuerySpec(
         "string_agg.",
     builder=lambda spark, sf: _curation().passage_dedup(
         load_table(spark, sf, "documents"), block=10
-    ).orderBy("doc_id"),
+    ),
     oracle_sql_str=_passage_dedup_oracle("md5(chunk_text)"),
 ))
 
@@ -1215,7 +1198,7 @@ Q(QuerySpec(
         "ROW_NUMBER partition.",
     builder=lambda spark, sf: _curation().passage_dedup(
         load_table(spark, sf, "documents"), block=10, scope="doc"
-    ).orderBy("doc_id"),
+    ),
     oracle_sql_str=_passage_dedup_oracle("doc_id, md5(chunk_text)"),
 ))
 
@@ -1230,7 +1213,7 @@ Q(QuerySpec(
         "QUALIFY row_number over the same md5 order.",
     builder=lambda spark, sf: _curation().stratified_sample_k(
         load_table(spark, sf, "documents"), k=10
-    ).select("source", "doc_id").orderBy("source", "doc_id"),
+    ).select("source", "doc_id"),
     oracle_sql_str="""
         SELECT source, doc_id
         FROM documents
@@ -1254,7 +1237,7 @@ Q(QuerySpec(
         "adenhq_hive_spark.operators.text", fromlist=["repetition_stats"]
     ).repetition_stats(
         load_table(spark, sf, "documents"), n=2
-    ).orderBy("doc_id"),
+    ),
     oracle_sql_str="""
         WITH g AS (
           SELECT doc_id, unnest(list_transform(
@@ -1318,7 +1301,6 @@ def _curation_pipeline(spark, sf):
             F.count("*").alias("n_docs"),
             F.sum("n_tokens").alias("n_tokens"),
         )
-        .orderBy("split")
     )
 
 
@@ -1452,7 +1434,6 @@ def _graph_curation(spark, sf):
                 F.count("*").alias("n_docs"),
                 F.sum("n_tokens").alias("n_tokens"),
             )
-            .orderBy("split")
         )
 
     g = GraphSpec(
@@ -1518,7 +1499,7 @@ Q(QuerySpec(
         ).bpe_train(
             load_table(spark, sf, "documents"), n_merges=8
         )[0],
-    ).orderBy("rank"),
+    ),
     has_oracle=False,
 ))
 
@@ -1532,8 +1513,7 @@ Q(QuerySpec(
         "in DuckDB.",
     builder=lambda spark, sf: __import__(
         "adenhq_hive_spark.operators.text", fromlist=["unigram_logprob"]
-    ).unigram_logprob(load_table(spark, sf, "documents"))
-    .orderBy("doc_id"),
+    ).unigram_logprob(load_table(spark, sf, "documents")),
     oracle_sql_str="""
         WITH ex AS (
           SELECT doc_id, unnest(list_filter(
@@ -1563,8 +1543,7 @@ Q(QuerySpec(
         "portability device.",
     builder=lambda spark, sf: __import__(
         "adenhq_hive_spark.operators.text", fromlist=["char_entropy"]
-    ).char_entropy(load_table(spark, sf, "documents"))
-    .orderBy("doc_id"),
+    ).char_entropy(load_table(spark, sf, "documents")),
     oracle_sql_str="""
         WITH cs AS (
           SELECT doc_id, len(text) AS n_chars,
@@ -1648,8 +1627,7 @@ Q(QuerySpec(
         "ln + ROUND(4) = the established portability device.",
     builder=lambda spark, sf: __import__(
         "adenhq_hive_spark.operators.text", fromlist=["bigram_logprob"]
-    ).bigram_logprob(load_table(spark, sf, "documents"))
-    .orderBy("doc_id"),
+    ).bigram_logprob(load_table(spark, sf, "documents")),
     oracle_sql_str="""
         WITH tk AS (
           SELECT doc_id, list_filter(
@@ -1695,7 +1673,7 @@ Q(QuerySpec(
         load_table(spark, sf, "documents").filter(F.col("doc_id") >= 250),
         load_table(spark, sf, "documents").filter(F.col("doc_id") < 250),
         k=3, threshold=0.5,
-    ).select("doc_id").orderBy("doc_id"),
+    ).select("doc_id"),
     oracle_sql_str="""
         WITH corpus AS (SELECT * FROM documents WHERE doc_id < 250),
         newb AS (SELECT * FROM documents WHERE doc_id >= 250),
@@ -1783,7 +1761,7 @@ Q(QuerySpec(
                 load_table(spark, sf, "embeddings"), threshold=0.45
             ).select("id_a", "id_b")
         ).dropDuplicates(),
-    ).orderBy("doc_id"),
+    ),
     oracle_sql_str="""
         WITH RECURSIVE sh AS (
           SELECT doc_id AS id, list_distinct(list_transform(
@@ -1847,7 +1825,7 @@ Q(QuerySpec(
         fromlist=["minhash_lsh_pairs_portable"],
     ).minhash_lsh_pairs_portable(
         load_table(spark, sf, "documents"), k=3, threshold=0.5
-    ).orderBy("id_a", "id_b"),
+    ),
     oracle_sql_str="""
         WITH sh AS (
           SELECT doc_id AS id, list_distinct(list_transform(
@@ -1906,7 +1884,7 @@ Q(QuerySpec(
     builder=lambda spark, sf: simhash_pairs(
         load_table(spark, sf, "documents"), k=3, max_hamming=6,
         portable=True,
-    ).orderBy("id_a", "id_b"),
+    ),
     oracle_sql_str="""
         WITH sh AS (
           SELECT doc_id AS id, list_distinct(list_transform(
@@ -1959,8 +1937,7 @@ Q(QuerySpec(
         "two-level aggregation over the same double-cast cells.",
     builder=lambda spark, sf: __import__(
         "adenhq_hive_spark.operators.similarity", fromlist=["label_centroids"]
-    ).label_centroids(load_table(spark, sf, "embeddings"))
-    .orderBy("label"),
+    ).label_centroids(load_table(spark, sf, "embeddings")),
     oracle_sql_str="""
         WITH ex AS (
           SELECT label, vec_id,
@@ -2028,7 +2005,7 @@ Q(QuerySpec(
     ).tfidf_top_terms(
         load_table(spark, sf, "documents"), text_col="text",
         id_col="doc_id", k=5,
-    ).orderBy("doc_id", "rnk"),
+    ),
     oracle_sql_str="""
         WITH ex AS (
           SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term
@@ -2106,7 +2083,7 @@ def _snapshot_diff_builder(spark, sf):
             F.concat(F.col("text"), F.lit(" rev2")),
         ).otherwise(F.col("text")),
     )
-    return snapshot_diff(old, new).orderBy("doc_id")
+    return snapshot_diff(old, new)
 
 
 Q(QuerySpec(
@@ -2153,7 +2130,7 @@ Q(QuerySpec(
         F.col("shard_id").cast("bigint").alias("shard_id"),
         F.col("pos").cast("bigint").alias("pos"),
         "doc_id",
-    ).orderBy("shard_id", "pos"),
+    ),
     oracle_sql_str="""
         WITH t AS (
           SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS h
@@ -2187,7 +2164,7 @@ Q(QuerySpec(
         "adenhq_hive_spark.operators.text", fromlist=["gopher_rules"]
     ).gopher_rules(
         load_table(spark, sf, "documents"), min_stop_hits=1
-    ).orderBy("doc_id"),
+    ),
     oracle_sql_str=r"""
         WITH b AS (
           SELECT doc_id,
@@ -2263,7 +2240,7 @@ def _c4_filter_builder(spark, sf):
             F.col("text"), r"((\S+\s+){9}\S+)\s+", "$1.\n"
         ),
     )
-    return c4_line_filter(docs, text_col="page").orderBy("doc_id")
+    return c4_line_filter(docs, text_col="page")
 
 
 Q(QuerySpec(
@@ -2327,7 +2304,7 @@ def _bpe_encode_builder(spark, sf):
         "doc_id",
         "n_tokens",
         F.md5(F.array_join("toks", "␟")).alias("toks_md5"),
-    ).orderBy("doc_id")
+    )
 
 
 Q(QuerySpec(
@@ -2364,8 +2341,7 @@ Q(QuerySpec(
         "construction (exact cosines on true vectors); clustering only "
         "costs recall, measured by pl_semdedup_check. k-means -> "
         "rows-only here.",
-    builder=lambda spark, sf: _semdedup(spark, sf)
-    .orderBy("vec_id"),
+    builder=_semdedup,
     has_oracle=False,
 ))
 
@@ -2430,7 +2406,7 @@ def _dsir_builder(spark, sf):
     return dsir_score(
         docs.filter(F.col("lang") != "en"),
         docs.filter(F.col("lang") == "en"),
-    ).orderBy("doc_id")
+    )
 
 
 Q(QuerySpec(
@@ -2520,8 +2496,7 @@ Q(QuerySpec(
     .select(
         "doc_id", "frac_latin", "frac_cjk", "frac_cyrillic",
         "frac_arabic", "frac_digit", "dominant_script",
-    )
-    .orderBy("doc_id"),
+    ),
     oracle_sql_str=r"""
         WITH c AS (
           SELECT doc_id,
@@ -2595,7 +2570,6 @@ Q(QuerySpec(
                ROUND(PERCENTILE(toks, 0.9), 4) AS p90_toks
         FROM t
         GROUP BY source
-        ORDER BY source
     """),
     oracle_sql_str="""
         WITH t AS (
@@ -2621,9 +2595,7 @@ Q(QuerySpec(
 def _ccnet_builder(spark, sf):
     from ..operators.text import ccnet_buckets
 
-    return ccnet_buckets(load_table(spark, sf, "documents")).orderBy(
-        "doc_id"
-    )
+    return ccnet_buckets(load_table(spark, sf, "documents"))
 
 
 Q(QuerySpec(
@@ -2785,7 +2757,7 @@ Q(QuerySpec(
         fromlist=["cluster_capped_dedup"],
     ).cluster_capped_dedup(
         load_table(spark, sf, "documents"), k=3, threshold=0.5
-    ).orderBy("doc_id"),
+    ),
     oracle_sql_str=_CLUSTER_LABELS_CTE + """
         , sized AS (
           SELECT doc_id, cluster_id,
@@ -2817,7 +2789,7 @@ Q(QuerySpec(
     ).editdist_verify(
         load_table(spark, sf, "documents"),
         k=3, candidate_threshold=0.3, sim_threshold=0.5,
-    ).orderBy("id_a", "id_b"),
+    ),
     oracle_sql_str="""
         WITH sh AS (
           SELECT doc_id AS id, list_distinct(list_transform(
@@ -3200,7 +3172,7 @@ Q(QuerySpec(
         fromlist=["hard_negatives"],
     ).hard_negatives(
         emb, k=5, anchors=emb.filter("vec_id < 50")
-    ))(load_table(spark, sf, "embeddings")).orderBy("anchor_id", "rank"),
+    ))(load_table(spark, sf, "embeddings")),
     oracle_sql_str="""
         SELECT anchor_id, rank, neg_id, cosine FROM (
           SELECT a.vec_id AS anchor_id, v.vec_id AS neg_id,
@@ -3262,7 +3234,7 @@ Q(QuerySpec(
         fromlist=["phash_portable"],
     ).phash_portable(
         load_table(spark, sf, "embeddings")
-    ).orderBy("id"),
+    ),
     oracle_sql_str="""
         WITH q AS (
           SELECT vec_id AS id,
@@ -3661,7 +3633,6 @@ def _dedup_incr_indexed_builder(spark, sf):
             corpus_hashes=corpus.select(F.md5("text").alias("_h")).distinct(),
         )
         .select("doc_id")
-        .orderBy("doc_id")
     )
 
 
@@ -3848,8 +3819,7 @@ Q(QuerySpec(
     builder=lambda spark, sf: __import__(
         "adenhq_hive_spark.operators.text", fromlist=["blocklist_filter"]
     ).blocklist_filter(load_table(spark, sf, "documents"), ["drop", "slow"])
-    .select("doc_id", "bl_hits", "bl_pass")
-    .orderBy("doc_id"),
+    .select("doc_id", "bl_hits", "bl_pass"),
     oracle_sql_str=r"""
         SELECT doc_id,
                CAST(len(regexp_extract_all(lower(text),
@@ -3910,8 +3880,7 @@ Q(QuerySpec(
     builder=lambda spark, sf: __import__(
         "adenhq_hive_spark.operators.text", fromlist=["source_keywords"]
     ).source_keywords(load_table(spark, sf, "documents"),
-                      top_k=5, min_count=5)
-    .orderBy("source", "rank"),
+                      top_k=5, min_count=5),
     oracle_sql_str="""
         WITH ex AS (
           SELECT source AS grp,
@@ -3956,8 +3925,7 @@ Q(QuerySpec(
     builder=lambda spark, sf: __import__(
         "adenhq_hive_spark.operators.dedup", fromlist=["containment_pairs"]
     ).containment_pairs(load_table(spark, sf, "documents"),
-                        k=3, threshold=0.9, min_shingles=5)
-    .orderBy("id_sub", "id_sup"),
+                        k=3, threshold=0.9, min_shingles=5),
     oracle_sql_str="""
         WITH sh AS (
           SELECT doc_id AS id, list_distinct(list_transform(
@@ -4132,8 +4100,7 @@ Q(QuerySpec(
         "frac4-exact.",
     builder=lambda spark, sf: __import__(
         "adenhq_hive_spark.operators.dedup", fromlist=["shingle_novelty"]
-    ).shingle_novelty(load_table(spark, sf, "documents"))
-    .orderBy("doc_id"),
+    ).shingle_novelty(load_table(spark, sf, "documents")),
     oracle_sql_str="""
         WITH sh AS (
           SELECT doc_id AS id, list_distinct(list_transform(
@@ -4186,8 +4153,7 @@ Q(QuerySpec(
         __import__(
             "adenhq_hive_spark.operators.text", fromlist=["frac4"]
         ).frac4(F.col("n_mismatch"), F.col("n_docs")).alias("mismatch_frac"),
-    )
-    .orderBy("source"),
+    ),
     oracle_sql_str=r"""
         WITH h AS (
           SELECT source, lang,
@@ -4455,7 +4421,7 @@ def _dedup_spans_builder(spark, sf):
 
     return duplicated_spans(
         load_table(spark, sf, "documents"), k=4, min_words=8, min_docs=2
-    ).orderBy("doc_id", "span_start")
+    )
 
 
 Q(QuerySpec(
@@ -4488,7 +4454,7 @@ def _sem_decontaminate_builder(spark, sf):
         emb.filter(F.col("vec_id") >= 25),
         emb.filter(F.col("vec_id") < 25),
         threshold=0.38,
-    ).orderBy("vec_id")
+    )
 
 
 Q(QuerySpec(
@@ -4561,7 +4527,7 @@ def _span_scrub_builder(spark, sf):
 
     docs = load_table(spark, sf, "documents")
     spans = duplicated_spans(docs, k=4, min_words=8, min_docs=2)
-    return scrub_spans(docs, spans).orderBy("doc_id")
+    return scrub_spans(docs, spans)
 
 
 Q(QuerySpec(
@@ -4772,7 +4738,6 @@ def _span_rate_builder(spark, sf):
                 F.coalesce("dup_words", F.lit(0)), F.col("n_words")
             ).alias("dup_share"),
         )
-        .orderBy("source")
     )
 
 
@@ -4818,7 +4783,7 @@ def _span_incr_builder(spark, sf):
     batch = docs.filter(F.col("doc_id") >= 250)
     return dedup_spans_incremental(
         batch, build_gram_postings(corpus), k=4, min_words=8
-    ).orderBy("doc_id", "span_start")
+    )
 
 
 Q(QuerySpec(
@@ -4863,7 +4828,6 @@ def _scrub_pipeline(spark, sf):
             F.sum("n_words").cast("long").alias("n_words"),
             F.sum("n_removed").cast("long").alias("n_removed"),
         )
-        .orderBy("split")
     )
 
 
@@ -4970,7 +4934,6 @@ def _drop_ledger(spark, sf):
             .otherwise("kept")
             .alias("drop_stage"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -5079,7 +5042,6 @@ def _attribution_builder(spark, sf):
             "attribution_rate",
             frac4(F.col("n_attributed"), F.col("n_purchases")),
         )
-        .orderBy("day")
     )
 
 
@@ -5135,7 +5097,6 @@ def _event_transitions(spark, sf):
     return (
         trans.join(tot, "prev")
         .select("prev", "next", "n", frac4(F.col("n"), F.col("n_prev")).alias("p"))
-        .orderBy("prev", "next")
     )
 
 
@@ -5194,7 +5155,6 @@ def _leak_census(spark, sf):
             F.count_distinct("corpus_doc_id").cast("long").alias("n_leaky_docs"),
             F.count_distinct("gram").cast("long").alias("n_shared_grams"),
         )
-        .orderBy("eval_doc_id")
     )
 
 
@@ -5233,7 +5193,7 @@ def _span_witness_builder(spark, sf):
 
     return span_witnesses(
         load_table(spark, sf, "documents"), k=4, min_words=8, min_docs=2
-    ).orderBy("doc_id", "span_start")
+    )
 
 
 Q(QuerySpec(
@@ -5306,7 +5266,7 @@ Q(QuerySpec(
         "adenhq_hive_spark.operators.curation", fromlist=["pack_ffd"]
     ).pack_ffd(
         load_table(spark, sf, "documents"), max_tokens=256
-    ).orderBy("shard", "bin_id", "doc_id"),
+    ),
     oracle_sql_str="""
         WITH RECURSIVE
         docs AS (
@@ -5370,8 +5330,7 @@ Q(QuerySpec(
         "oracle replays the same route + integer sum in DuckDB.",
     builder=lambda spark, sf: __import__(
         "adenhq_hive_spark.operators.text", fromlist=["feature_hash"]
-    ).feature_hash(load_table(spark, sf, "documents"), dims=32)
-    .orderBy("doc_id", "dim"),
+    ).feature_hash(load_table(spark, sf, "documents"), dims=32),
     oracle_sql_str="""
         WITH ex AS (
           SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term
@@ -5442,7 +5401,6 @@ def _hash_sim_builder(spark, sf):
     return (
         ranked.filter(F.col("rank") <= 5)
         .select("qid", "rank", F.col("doc_id").alias("cand_id"), "cosine")
-        .orderBy("qid", "rank")
     )
 
 
@@ -5542,7 +5500,6 @@ def _source_overlap(spark, sf):
                 F.col("n_a") + F.col("n_b") - F.col("n_inter"),
             ).alias("jaccard"),
         )
-        .orderBy("src_a", "src_b")
     )
 
 
@@ -5614,7 +5571,6 @@ def _val_coverage(spark, sf):
                 F.coalesce("n_covered", F.lit(0)), F.col("n_grams")
             ).alias("coverage"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -5677,8 +5633,7 @@ Q(QuerySpec(
         "full oracle hash. Map-only; narrow (vec_id, dim, value) rows.",
     builder=lambda spark, sf: __import__(
         "adenhq_hive_spark.operators.similarity", fromlist=["jl_project"]
-    ).jl_project(load_table(spark, sf, "embeddings"), out_dims=16)
-    .orderBy("vec_id", "dim"),
+    ).jl_project(load_table(spark, sf, "embeddings"), out_dims=16),
     oracle_sql_str="""
         SELECT vec_id, CAST(j AS INT) AS dim,
                ROUND(list_reduce(list_transform(range(1, 65),
@@ -5707,7 +5662,7 @@ Q(QuerySpec(
         load_table(spark, sf, "documents").filter(F.col("source") != "src0"),
         load_table(spark, sf, "documents").filter(F.col("source") == "src0"),
         n=5,
-    ).select("doc_id").orderBy("doc_id"),
+    ).select("doc_id"),
     oracle_sql_str="""
         WITH g AS (
           SELECT doc_id, source, unnest(list_distinct(list_transform(
@@ -5744,7 +5699,7 @@ Q(QuerySpec(
         e0.union(e0.select(F.col("dst").alias("src"),
                            F.col("src").alias("dst"))),
         iterations=3,
-    ).orderBy("node"))(
+    ))(
         load_table(spark, sf, "orders")
         .join(
             load_table(spark, sf, "lineitem"),
@@ -5827,7 +5782,6 @@ Q(QuerySpec(
             F.min("x").alias("x_min"), F.max("x").alias("x_max"),
             F.min("y").alias("y_min"), F.max("y").alias("y_max"),
         )
-        .orderBy("zbucket")
     ))(__import__("adenhq_hive_spark.operators.zorder",
                   fromlist=["morton_key"])),
     oracle_sql_str="""
@@ -5866,8 +5820,7 @@ Q(QuerySpec(
         "merge, so partial aggregation does the map-side combine.",
     builder=lambda spark, sf: __import__(
         "adenhq_hive_spark.operators.sketch", fromlist=["hll_registers"]
-    ).hll_registers(load_table(spark, sf, "orders"), "o_custkey")
-    .orderBy("register"),
+    ).hll_registers(load_table(spark, sf, "orders"), "o_custkey"),
     oracle_sql_str="""
         WITH h AS (
           SELECT md5(CAST(o_custkey AS VARCHAR)) AS h FROM orders
@@ -5953,8 +5906,7 @@ Q(QuerySpec(
         "narrow (id, dim, q, scale) rows.",
     builder=lambda spark, sf: __import__(
         "adenhq_hive_spark.operators.similarity", fromlist=["int8_quantize"]
-    ).int8_quantize(load_table(spark, sf, "embeddings"))
-    .orderBy("vec_id", "dim"),
+    ).int8_quantize(load_table(spark, sf, "embeddings")),
     oracle_sql_str="""
         WITH m AS (
           SELECT vec_id, embedding,
@@ -5989,7 +5941,7 @@ Q(QuerySpec(
     ).copurchase_lift(
         load_table(spark, sf, "lineitem"), "l_orderkey", "l_partkey",
         min_support=2,
-    ).orderBy("item_a", "item_b"),
+    ),
     oracle_sql_str="""
         WITH items AS (
           SELECT DISTINCT l_orderkey AS b, l_partkey AS item FROM lineitem
@@ -6203,7 +6155,7 @@ Q(QuerySpec(
     ).select(
         "source", "doc_id", "rank",
         F.round("es_key", 6).alias("es_key_r6"),
-    ).orderBy("source", "rank"),
+    ),
     oracle_sql_str="""
         WITH keyed AS (
           SELECT source, doc_id,
@@ -6252,7 +6204,7 @@ Q(QuerySpec(
         .select(F.concat(F.lit("s"), F.col("s_suppkey").cast("string"))
                 .alias("node")),
         iterations=3,
-    ).orderBy("node"))(
+    ))(
         __import__("adenhq_hive_spark.operators.graph_rank",
                    fromlist=["personalized_pagerank_int"]),
         load_table(spark, sf, "orders")
@@ -6372,7 +6324,6 @@ Q(QuerySpec(
                (n * sxy - sx * sy) * CAST(1000000 AS BIGINT)
                  DIV NULLIF(n * sxx - sx * sx, 0) AS slope_ppm
         FROM mom
-        ORDER BY event_type
     """,
     oracle_sql_str="""
         WITH daily AS (
@@ -6421,7 +6372,7 @@ Q(QuerySpec(
     ).item_cosine_topk(
         load_table(spark, sf, "lineitem"), "l_orderkey", "l_partkey",
         k=5, min_support=2,
-    ).orderBy("item_a", "rank"),
+    ),
     oracle_sql_str="""
         WITH items AS (
           SELECT DISTINCT l_orderkey AS b, l_partkey AS item FROM lineitem
@@ -6477,7 +6428,7 @@ Q(QuerySpec(
         e0.union(e0.select(F.col("dst").alias("src"),
                            F.col("src").alias("dst"))),
         iterations=2,
-    ).orderBy("node"))(
+    ))(
         __import__("adenhq_hive_spark.operators.graph_rank",
                    fromlist=["label_propagation"]),
         load_table(spark, sf, "orders")
@@ -6537,7 +6488,7 @@ Q(QuerySpec(
     ).association_rules(
         load_table(spark, sf, "lineitem"), "l_orderkey", "l_partkey",
         min_support=2,
-    ).orderBy("antecedent", "consequent"),
+    ),
     oracle_sql_str="""
         WITH items AS (
           SELECT DISTINCT l_orderkey AS b, l_partkey AS item FROM lineitem
@@ -6794,7 +6745,7 @@ Q(QuerySpec(
         F.coalesce("input_tokens", F.lit(-1)).alias("input_tokens"),
         F.coalesce("output_tokens", F.lit(-1)).alias("output_tokens"),
         F.coalesce("model", F.lit("")).alias("model"),
-    ).orderBy("req_id", "event_idx"),
+    ),
     oracle_sql_str="""
         WITH p AS (
           SELECT CAST(doc_id AS VARCHAR) AS req_id,
@@ -6983,8 +6934,7 @@ Q(QuerySpec(
     builder=lambda spark, sf: __import__(
         "adenhq_hive_spark.operators.sketch", fromlist=["cms_counters"]
     ).cms_counters(load_table(spark, sf, "lineitem"), "l_partkey",
-                   depth=4, width=256)
-    .orderBy("row", "bucket"),
+                   depth=4, width=256),
     oracle_sql_str="""
         WITH v AS (SELECT CAST(l_partkey AS VARCHAR) AS v FROM lineitem),
         hj AS (
@@ -8150,7 +8100,7 @@ Q(QuerySpec(
         "4 with the signed-zero guard (reading-ease is a difference "
         "and CAN round to -0.0); wordless docs emit NULLs, never a "
         "zero division. Scale: embarrassingly parallel map, no "
-        "shuffle before the output sort.",
+        "shuffle.",
     builder=_readability_q,
     oracle_sql_str="""
         WITH base AS (
@@ -8768,8 +8718,7 @@ Q(QuerySpec(
     builder=lambda spark, sf: __import__(
         "adenhq_hive_spark.operators.sketch", fromlist=["cms_counters"]
     ).cms_counters(load_table(spark, sf, "lineitem"), "l_partkey",
-                   depth=4, width=256, hash_mode="xxh")
-    .orderBy("row", "bucket"),
+                   depth=4, width=256, hash_mode="xxh"),
     has_oracle=False,
 ))
 
@@ -8922,13 +8871,7 @@ def _graph_agent_loop(spark, sf):
         return nxt
 
     def finalize(done, memory):
-        # materialize before the global sort: rangepartitioning SAMPLES
-        # its child first, which would run the judge_udf ArrowEvalPython
-        # cascade twice (r12 range-sampling audit; per-run persist,
-        # released between queries)
-        from ..operators.dedup import _materialize
-
-        return _materialize(done).orderBy("doc_id")
+        return done
 
     g = GraphSpec(
         nodes={
@@ -9070,7 +9013,7 @@ def _graph_tool_loop(spark, sf):
         return spark.createDataFrame(
             memory["trace"],
             "attempt int, pattern string, n_hits bigint, verdict string",
-        ).orderBy("attempt")
+        )
 
     g = GraphSpec(
         nodes={
@@ -9185,7 +9128,6 @@ def _bucketed_join_q(spark, sf):
             F.count("*").alias("n_items"),
             F.sum(F.col("l_quantity").cast("bigint")).alias("sum_qty"),
         )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -9265,7 +9207,7 @@ Q(QuerySpec(
             "event_id", "event_type", "value"
         ),
         "event_type", "value", "event_id", k=3, salts=16,
-    ).orderBy("event_type", "rank"),
+    ),
     oracle_sql_str="""
         WITH r AS (
           SELECT event_id, event_type, value,
@@ -9365,7 +9307,6 @@ def _toolcall_assembly_q(spark, sf):
         .withColumn(
             "arg_doc", F.get_json_object(F.col("tool_input"), "$.doc")
         )
-        .orderBy(F.col("req_id").cast("long"), "tool_idx")
     )
 
 

@@ -326,7 +326,7 @@ Q(QuerySpec(
         SELECT 'lineitem' AS src,
                CAST(NULL AS DOUBLE) AS sd,
                CAST(NULL AS DOUBLE) AS vp,
-               ROUND(CORR(l_quantity, l_extendedprice), 4) AS corr_qp
+               ROUND(CORR(l_quantity, l_extendedprice), 4) + 0.0 AS corr_qp
         FROM lineitem
         ORDER BY src NULLS LAST
     """,
@@ -965,7 +965,9 @@ Q(QuerySpec(
                CAST(CAST(l_quantity AS DECIMAL(18,2)) AS DOUBLE) AS qty_dec,
                CAST(l_linenumber AS VARCHAR(16)) AS line_str
         FROM lineitem
-        ORDER BY l_orderkey NULLS LAST, l_linenumber NULLS LAST
+        ORDER BY l_orderkey NULLS LAST, l_linenumber NULLS LAST,
+                 disc_band NULLS LAST, disc_or_sentinel NULLS LAST,
+                 qty_dec NULLS LAST, line_str NULLS LAST
         LIMIT 200
     """,
 ))
@@ -1021,7 +1023,8 @@ Q(QuerySpec(
         "[1]/len (DuckDB lists are 1-based like element_at).",
     engine_sql="""
         SELECT label, COUNT(*) AS n,
-               ROUND(AVG(CAST(element_at(embedding, 1) AS DOUBLE)), 4) AS avg_c1,
+               ROUND(AVG(CAST(element_at(embedding, 1) AS DOUBLE)), 4) + 0.0
+                 AS avg_c1,
                CAST(MIN(size(embedding)) AS INT) AS dim
         FROM embeddings
         GROUP BY label
@@ -1029,7 +1032,7 @@ Q(QuerySpec(
     """,
     oracle_sql_str="""
         SELECT label, COUNT(*) AS n,
-               ROUND(AVG(CAST(embedding[1] AS DOUBLE)), 4) AS avg_c1,
+               ROUND(AVG(CAST(embedding[1] AS DOUBLE)), 4) + 0.0 AS avg_c1,
                CAST(MIN(len(embedding)) AS INT) AS dim
         FROM embeddings
         GROUP BY label
@@ -1263,7 +1266,7 @@ Q(QuerySpec(
         "+1) vs unnest + generate_subscripts (1-based).",
     engine_sql="""
         SELECT vec_id, CAST(pos + 1 AS BIGINT) AS pos,
-               ROUND(CAST(val AS DOUBLE), 4) AS val
+               ROUND(CAST(val AS DOUBLE), 4) + 0.0 AS val
         FROM embeddings
         LATERAL VIEW posexplode(embedding) t AS pos, val
         WHERE vec_id < 3
@@ -1272,7 +1275,7 @@ Q(QuerySpec(
     oracle_sql_str="""
         SELECT vec_id,
                CAST(generate_subscripts(embedding, 1) AS BIGINT) AS pos,
-               ROUND(CAST(unnest(embedding) AS DOUBLE), 4) AS val
+               ROUND(CAST(unnest(embedding) AS DOUBLE), 4) + 0.0 AS val
         FROM embeddings
         WHERE vec_id < 3
         ORDER BY vec_id NULLS LAST, pos NULLS LAST
@@ -1758,7 +1761,6 @@ Q(QuerySpec(
         )
         SELECT d.d AS day, CAST(COALESCE(dd.n, 0) AS BIGINT) AS n_orders
         FROM days d LEFT JOIN daily dd ON dd.day = d.d
-        ORDER BY day NULLS LAST
     """,
     oracle_sql_str=_Q86_SQL,
 ))
@@ -1892,7 +1894,7 @@ Q(QuerySpec(
                ROUND(aggregate(transform(embedding,
                                          x -> CAST(x AS DOUBLE)),
                                CAST(0.0 AS DOUBLE), (a, x) -> a + x), 4)
-                 AS vec_sum,
+                 + 0.0 AS vec_sum,
                size(filter(embedding, x -> x > 0)) AS n_pos,
                exists(embedding, x -> x > CAST(0.2 AS FLOAT)) AS has_big,
                forall(embedding, x -> x > CAST(-0.5 AS FLOAT)) AS bounded,
@@ -1909,7 +1911,7 @@ Q(QuerySpec(
                    list_prepend(CAST(0.0 AS DOUBLE),
                        list_transform(embedding,
                                       x -> CAST(x AS DOUBLE))),
-                   (a, x) -> a + x), 4) AS vec_sum,
+                   (a, x) -> a + x), 4) + 0.0 AS vec_sum,
                CAST(len(list_filter(embedding, x -> x > 0)) AS INT)
                  AS n_pos,
                len(list_filter(embedding,

@@ -10,6 +10,7 @@ enabled for the pandas/UDF path.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -86,10 +87,34 @@ _DEFAULTS = {
 # regions, no GCLocker interplay, and cached/broadcast data keeps the
 # whole heap. On a cluster this is the same flag per executor, sized
 # like memoryOverhead (a few GB per executor core-group).
-_OFFHEAP = os.environ.get("SPARK_GRAFT_OFFHEAP", "8g")
-if _OFFHEAP not in ("", "0", "off"):
-    _DEFAULTS["spark.memory.offHeap.enabled"] = "true"
-    _DEFAULTS["spark.memory.offHeap.size"] = _OFFHEAP
+#
+# SPARK_GRAFT_OFFHEAP sets the size; a zero size or an "off" word
+# ('', '0', '0g', 'off', 'false', 'no'; any case) keeps execution
+# memory on-heap.
+_OFFHEAP_OFF = {"", "0", "off", "false", "no"}
+_SIZE = re.compile(r"(\d+)(b|kb?|mb?|gb?|tb?|pb?)")
+
+
+def _offheap_conf(value: str) -> dict[str, str]:
+    """Session settings for an off-heap size string: empty when the value
+    switches off-heap off, else the enabled flag and the size. Anything
+    else raises ValueError here rather than failing JVM start-up."""
+    v = value.strip().lower()
+    if v in _OFFHEAP_OFF:
+        return {}
+    m = _SIZE.fullmatch(v)
+    if m is None:
+        raise ValueError(
+            f"SPARK_GRAFT_OFFHEAP={value!r}: expected a size with a unit "
+            f"(e.g. 8g, 512m) or one of {sorted(_OFFHEAP_OFF)} / a zero size "
+            "to disable off-heap memory"
+        )
+    if int(m.group(1)) == 0:
+        return {}
+    return {
+        "spark.memory.offHeap.enabled": "true",
+        "spark.memory.offHeap.size": v,
+    }
 
 
 def get_spark(app_name: str = "adenhq_hive_spark", **overrides: str) -> SparkSession:
@@ -101,6 +126,7 @@ def get_spark(app_name: str = "adenhq_hive_spark", **overrides: str) -> SparkSes
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = SparkSession.builder.master(f"local[{cpus}]").appName(app_name)
     conf = dict(_DEFAULTS)
+    conf.update(_offheap_conf(os.environ.get("SPARK_GRAFT_OFFHEAP", "8g")))
     conf.update(overrides)
     for k, v in conf.items():
         builder = builder.config(k, v)

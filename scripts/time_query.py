@@ -43,6 +43,7 @@ def main() -> None:
             overrides[k] = v
 
     sys.path.insert(0, "/root/repo")
+    from adenhq_hive_spark.operators.dedup import release_persisted
     from adenhq_hive_spark.queries import all_queries
     from adenhq_hive_spark.session import get_spark
 
@@ -56,6 +57,8 @@ def main() -> None:
         spec.run(spark, sf_dir).write.mode("overwrite").format("noop").save()
         dt = time.perf_counter() - w0
         s1, t1 = steal_ticks()
+        # per-run persists (_materialize) must not pile up across runs
+        release_persisted()
         runs.append(round(dt, 1))
         steals.append(round(100.0 * (s1 - s0) / max(1, t1 - t0), 1))
         print(f"run{i}{label}: {dt:.1f}s steal {steals[-1]}%",

@@ -221,7 +221,7 @@ def test_limit_queries_stable_across_parallelism(spark):
         results = {}
         for parts in ("5", "32"):
             spark.conf.set("spark.sql.shuffle.partitions", parts)
-            for name in ("q36", "q42", "q43", "q33"):
+            for name in ("q36", "q42", "q43", "q33", "q51"):
                 rows = [tuple(r) for r in QUERIES[name].run(spark, SF_SMOKE).collect()]
                 results.setdefault(name, []).append(rows)
         for name, (a, b) in results.items():
